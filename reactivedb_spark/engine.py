@@ -31,7 +31,10 @@ import uuid as _uuid
 from dataclasses import dataclass
 from typing import Callable, Optional
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from reactivedb_spark import constants as C
 from reactivedb_spark.config import (
@@ -125,21 +128,12 @@ class Delta:
 
     @staticmethod
     def _count(df: Optional[DataFrame]) -> int:
+        # deltas are parquet the store wrote (appended or staged): footer
+        # metadata answers without a Spark job
         if df is None:
             return 0
-        # deltas are staged parquet: footer metadata answers without a
-        # Spark job (falls back to count() for unmaterialized frames)
-        try:
-            files = df.inputFiles()
-            if files:
-                import pyarrow.parquet as pq
-
-                return sum(
-                    pq.read_metadata(f.replace("file:", "")).num_rows for f in files
-                )
-        except Exception:
-            pass
-        return df.count()
+        return ParquetSnapshotStore.num_rows(
+            f.replace("file:", "") for f in df.inputFiles())
 
     def merged_with(self, other: "Delta") -> "Delta":
         def u(a, b):
@@ -150,6 +144,16 @@ class Delta:
             return a.unionByName(b)
 
         return Delta(u(self.inserts, other.inserts), u(self.deletes, other.deletes))
+
+
+@dataclass
+class Ledger:
+    """A commit's affected keys of one keyed table, staged partitioned by
+    ``_kb`` (key column first)."""
+
+    rows: DataFrame
+    buckets: list  # the _kb partition dirs the commit may rewrite
+    has_null: bool  # a key is null (from parquet footer statistics)
 
 
 @dataclass
@@ -361,24 +365,10 @@ class Engine:
             C.PARTITION_BUCKET, self._bucket_of(F.col(key_column)).cast("int")
         )
 
-    def _rows_to_df(self, rows: list[dict], schema: T.StructType) -> DataFrame:
-        """Driver row lists via a typed pyarrow Table — the Arrow ingest
-        path is ~3× faster than parallelize-of-Rows and yields a single
-        partition (one output file per commit)."""
-        try:
-            import pyarrow as pa
-            from pyspark.sql.pandas.types import to_arrow_schema
-
-            tbl = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
-            return self.spark.createDataFrame(tbl)
-        except Exception:
-            return self.spark.createDataFrame(rows, schema)
-
-    def _stage_nonempty(self, table: str, df: DataFrame) -> Optional[DataFrame]:
-        staged = self.store.stage(table, df.select(*self.tables[table].schema.fieldNames()))
-        if self.store.stage_count(staged) == 0:  # footer read, no Spark job
-            return None
-        return staged
+    def _stage_nonempty(self, table: str, df: DataFrame,
+                        partition_col: Optional[str] = None) -> Optional[DataFrame]:
+        return self.store.stage(
+            table, df.select(*self.tables[table].schema.fieldNames()), partition_col)
 
     @staticmethod
     def _max_seq_from_paths(paths) -> Optional[int]:
@@ -482,23 +472,11 @@ class Engine:
             return {}
 
         def work():
-            # Row-list inserts are driver-latency-bound: the rows are
-            # already typed Python values with driver-generated entry
-            # ids/_seq, so the delta file can land via pyarrow directly —
-            # zero Spark jobs for the seed write (guide §2.1 fixed
-            # overhead; a one-row commit previously paid a full Spark
-            # write job). Bulk insert_df keeps the Spark write path.
-            delta = None
-            try:
-                import pyarrow as pa
-                from pyspark.sql.pandas.types import to_arrow_schema
-
-                tbl = pa.Table.from_pylist(
-                    prepared, schema=to_arrow_schema(st.schema))
-                delta, _n = self.store.append_rows(table, tbl)
-            except Exception:
-                df = self._rows_to_df(prepared, st.schema)
-                delta, _n = self.store.append_delta(table, df)
+            # the rows are typed Python values with driver-generated entry
+            # ids/_seq: the seed delta lands as a pyarrow Table, zero Spark
+            # jobs; a row that does not fit the schema raises here
+            tbl = pa.Table.from_pylist(prepared, schema=to_arrow_schema(st.schema))
+            delta, _n = self.store.append_delta(table, tbl)
             if delta is None:
                 return {}
             return self._propagate({table: Delta(inserts=delta)})
@@ -578,25 +556,12 @@ class Engine:
 
     # -- propagation -------------------------------------------------------
     @staticmethod
-    def _staged_bytes(d: "Delta") -> Optional[int]:
+    def _staged_bytes(d: "Delta") -> int:
         """Total staged parquet bytes of a delta (local file sizes, no
-        Spark job); None when any side is not file-backed."""
-        total = 0
-        for df in (d.inserts, d.deletes):
-            if df is None:
-                continue
-            try:
-                files = df.inputFiles()
-            except Exception:
-                return None
-            if not files:
-                return None
-            for f in files:
-                try:
-                    total += os.path.getsize(f.replace("file:", ""))
-                except OSError:
-                    return None
-        return total
+        Spark job)."""
+        return sum(os.path.getsize(f.replace("file:", ""))
+                   for df in (d.inserts, d.deletes) if df is not None
+                   for f in df.inputFiles())
 
     def _propagation_shuffle(self, seed: dict[str, Delta]):
         """Size the propagation wave's shuffles to the DELTA, not the
@@ -615,11 +580,8 @@ class Engine:
 
         @contextlib.contextmanager
         def scope():
-            sizes = [self._staged_bytes(d) for d in seed.values()]
-            small = sizes and all(
-                s is not None and s <= _DELTA_BROADCAST_LIMIT for s in sizes
-            )
-            if not small:
+            if not all(self._staged_bytes(d) <= _DELTA_BROADCAST_LIMIT
+                       for d in seed.values()):
                 yield
                 return
             key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
@@ -747,18 +709,56 @@ class Engine:
             out.deletes = self._delete_by_provenance(child, d.deletes)
         return out if (out.inserts is not None or out.deletes is not None) else None
 
-    def _affected_buckets(self, child: str, keys: DataFrame, column: str) -> list:
-        """Distinct hash buckets of the affected keys — the ≤ N_KEY_BUCKETS
-        values that bound which partition dirs a keyed commit may rewrite.
-        With no committed state yet there is nothing to prune or carry
-        forward, so skip the probe job and declare every bucket touched
-        (the write degenerates to a plain full write of the delta)."""
-        if self.store.is_empty(child):
-            return list(range(C.N_KEY_BUCKETS))
-        rows = keys.select(
-            self._bucket_of(F.col(column)).cast("int").alias("b")
-        ).distinct().collect()
-        return sorted(r["b"] for r in rows)
+    def _ledger(self, child: str, keys: DataFrame, column: str) -> Optional[Ledger]:
+        """Stage the commit's affected-key ledger of keyed ``child`` once,
+        partitioned by ``_kb``: the commit's later key joins read these
+        staged rows instead of recomputing the keys, and the bucket set
+        comes from the files' ``_kb=`` dirs, with no probe job. Keys may
+        repeat: the ledger only feeds semi and anti joins. None when no
+        key is affected."""
+        rows = self.store.stage(
+            child, self._with_bucket(keys, column), C.PARTITION_BUCKET)
+        if rows is None:
+            return None
+        files = [f.replace("file:", "") for f in rows.inputFiles()]
+        return Ledger(rows, self._buckets_of(files), self._has_nulls(files, column))
+
+    @staticmethod
+    def _buckets_of(files) -> list:
+        """``_kb`` values of the files of a frame staged partitioned by
+        ``_kb``, read from their dir names."""
+        prefix = C.PARTITION_BUCKET + "="
+        return sorted({int(os.path.basename(os.path.dirname(f))[len(prefix):])
+                       for f in files})
+
+    @staticmethod
+    def _match(rows: DataFrame, column: str, ledger: Ledger, how: str) -> DataFrame:
+        """Semi/anti join of ``rows`` on ``column`` against a ledger's
+        keys. A null key is one key, as in a batch ``groupBy``; the
+        null-safe condition is used only when the ledger holds a null,
+        because it turns a broadcast single-long-key join into a
+        multi-column hashed relation that costs a full memory page."""
+        keys = _keyset(ledger.rows.select(
+            F.col(ledger.rows.columns[0]).alias("_lk")))
+        col, lk = F.col(column), F.col("_lk")
+        return rows.join(keys, col.eqNullSafe(lk) if ledger.has_null else col == lk, how)
+
+    @staticmethod
+    def _has_nulls(files, column: str) -> bool:
+        """Whether parquet ``files`` may hold a null ``column`` value, from
+        footer statistics (no Spark job; a missing count or a nested
+        column answers yes)."""
+        for f in files:
+            md = pq.read_metadata(f)
+            leaves = [md.schema.column(i).path for i in range(md.num_columns)]
+            if column not in leaves:
+                return True
+            idx = leaves.index(column)
+            for rg in range(md.num_row_groups):
+                st = md.row_group(rg).column(idx).statistics
+                if st is None or not st.has_null_count or st.null_count:
+                    return True
+        return False
 
     def _replace_keyed(self, child: str, content: DataFrame, buckets: list) -> None:
         """Commit keyed state touching only the affected ``_kb`` partition
@@ -766,28 +766,25 @@ class Engine:
         "What's wrong" #3 of round 1). ``content`` must hold exactly the
         new rows of those buckets."""
         if len(buckets) >= C.N_KEY_BUCKETS:
-            self.store.replace(child, content, partition_by=[C.PARTITION_BUCKET])
+            self.store.replace(child, content, C.PARTITION_BUCKET)
         else:
-            self.store.replace_partitions(
-                child, content, [C.PARTITION_BUCKET], buckets
-            )
+            self.store.replace_partitions(child, content, C.PARTITION_BUCKET, buckets)
 
     def _delete_by_provenance(self, child: str, parent_deleted: DataFrame,
                               provenance_col: str = C.SOURCE_ENTRY_ID) -> Optional[DataFrame]:
         ids = parent_deleted.select(F.col(C.ENTRY_ID).alias("_pid"))
         state = self.store.read(child)
         cond = F.col(provenance_col) == F.col("_pid")
-        child_del = self._stage_nonempty(child, state.join(_keyset(ids), cond, "left_semi"))
+        keyed = self.tables[child].key_column is not None
+        # keyed deletes stage partitioned by _kb: the buckets that change
+        # are the staged files' dirs
+        child_del = self._stage_nonempty(
+            child, state.join(_keyset(ids), cond, "left_semi"),
+            C.PARTITION_BUCKET if keyed else None)
         if child_del is None:
             return None
-        st = self.tables[child]
-        if st.key_column:
-            # staged deletes carry their _kb — only those buckets change
-            buckets = sorted(
-                r["b"] for r in child_del.select(
-                    F.col(C.PARTITION_BUCKET).cast("int").alias("b")
-                ).distinct().collect()
-            )
+        if keyed:
+            buckets = self._buckets_of(child_del.inputFiles())
             keep = state.filter(F.col(C.PARTITION_BUCKET).isin(buckets)).join(
                 _keyset(ids), cond, "left_anti"
             )
@@ -856,15 +853,21 @@ class Engine:
         )
         if d.inserts is not None:
             normalized = union_op.normalize_delta(tr, parent, d.inserts, op_schema)
+            # null keys never merge: they stay out of the ledger
             keys = normalized.select(C.MATCHING_KEY).filter(
                 F.col(C.MATCHING_KEY).isNotNull()
-            ).distinct()
-            buckets = self._affected_buckets(child, keys, C.MATCHING_KEY)
+            )
+            ledger = self._ledger(child, keys, C.MATCHING_KEY)
+            buckets = ledger.buckets if ledger is not None else []
             state = self.store.read(child)
             # bucket pre-filter prunes the state scan to the affected
             # partition dirs before the key semi/anti joins
             state_aff = state.filter(F.col(C.PARTITION_BUCKET).isin(buckets))
-            affected_old = state_aff.join(_keyset(keys), C.MATCHING_KEY, "left_semi")
+            if ledger is None:  # no bucket is affected, nothing merges
+                affected_old = rest = state_aff
+            else:
+                affected_old = self._match(state_aff, C.MATCHING_KEY, ledger, "left_semi")
+                rest = self._match(state_aff, C.MATCHING_KEY, ledger, "left_anti")
             merged = union_op.merge(
                 affected_old.drop(C.ENTRY_ID, C.PARTITION_BUCKET), normalized, op_schema
             )
@@ -880,7 +883,6 @@ class Engine:
                 lambda: self._stage_nonempty(child, affected_old),
             )
             if staged is not None:
-                rest = state_aff.join(_keyset(keys), C.MATCHING_KEY, "left_anti")
                 # sortWithinPartitions(key): parquet row-group min/max
                 # stats then skip within each bucket too (Z-order-lite)
                 self._replace_keyed(
@@ -907,48 +909,42 @@ class Engine:
         parts = [x.select(F.col(tr.aggregated_column).alias(C.AGGREGATED_COLUMN))
                  for x in (d.inserts, d.deletes) if x is not None]
         keys = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-        keys = keys.filter(F.col(C.AGGREGATED_COLUMN).isNotNull()).distinct()
-        buckets = self._affected_buckets(child, keys, C.AGGREGATED_COLUMN)
+        ledger = self._ledger(child, keys, C.AGGREGATED_COLUMN)
+        buckets = ledger.buckets
         state = self.store.read(child)
         state_aff = state.filter(F.col(C.PARTITION_BUCKET).isin(buckets))
-        plan = agg_op.classify(tr)
-        if plan is not None and d.deletes is None:
+        # the replaced group rows, staged first: they are the commit's
+        # deletes and the merge's only read of committed state
+        old = self._stage_nonempty(
+            child, self._match(state_aff, C.AGGREGATED_COLUMN, ledger, "left_semi"))
+        if agg_op.classify(tr) is not None and d.deletes is None and not ledger.has_null:
             # decomposable + insert-only: merge delta partials into state,
-            # never touching the parent table (O(delta) per batch)
+            # never touching the parent table (O(delta) per batch); with
+            # no prior group the state side is an empty relation
             delta_groups = agg_op.compute_groups(tr, d.inserts)
-            state_affected = state_aff.join(_keyset(keys), C.AGGREGATED_COLUMN, "left_semi")
             new_groups = agg_op.merge_with_state(
-                tr, state_affected, delta_groups, d.inserts.schema
+                tr, old if old is not None else state_aff.limit(0),
+                delta_groups, d.inserts.schema,
             )
         else:
-            # general fold or deletes involved: re-aggregate affected keys
-            # from the parent (batched version of transform.rs:239)
-            parent_rows = self.store.read(parent)
-            affected = parent_rows.join(
-                _keyset(keys),
-                parent_rows[tr.aggregated_column] == keys[C.AGGREGATED_COLUMN],
-                "left_semi",
-            )
+            # general fold, deletes, or a null key (merge_with_state
+            # matches groups by plain equality): re-aggregate affected
+            # keys from the parent (batched version of transform.rs:239)
+            affected = self._match(
+                self.store.read(parent), tr.aggregated_column, ledger, "left_semi")
             new_groups = agg_op.compute_groups(tr, affected)
-        old = state_aff.join(_keyset(keys), C.AGGREGATED_COLUMN, "left_semi")
-        # the new-groups staging and the replaced-rows staging are
-        # independent Spark actions — overlap them (guide §2.6)
-        staged, old_staged = self._concurrent(
-            lambda: self._stage_nonempty(
-                child,
-                self._with_bucket(
-                    self._with_entry_id(new_groups), C.AGGREGATED_COLUMN),
-            ),
-            lambda: self._stage_nonempty(child, old),
+        staged = self._stage_nonempty(
+            child,
+            self._with_bucket(self._with_entry_id(new_groups), C.AGGREGATED_COLUMN),
         )
-        rest = state_aff.join(_keyset(keys), C.AGGREGATED_COLUMN, "left_anti")
+        rest = self._match(state_aff, C.AGGREGATED_COLUMN, ledger, "left_anti")
         new_state = rest.unionByName(staged) if staged is not None else rest
         self._replace_keyed(
             child, new_state.sortWithinPartitions(C.AGGREGATED_COLUMN), buckets
         )
-        if staged is None and old_staged is None:
+        if staged is None and old is None:
             return None
-        return Delta(inserts=staged, deletes=old_staged)
+        return Delta(inserts=staged, deletes=old)
 
     def _apply_dedup(self, child: str, tr: DedupTransformConfig, parent: str, d: Delta) -> Optional[Delta]:
         """First-writer-wins exact dedup as keyed reactive state
@@ -964,13 +960,15 @@ class Engine:
         out = Delta()
         if d.inserts is not None:
             reps = dedup_tr_op.representatives(tr, d.inserts)
-            keys = reps.select(C.DEDUP_KEY).distinct()
-            buckets = self._affected_buckets(child, keys, C.DEDUP_KEY)
+            ledger = self._ledger(child, reps.select(C.DEDUP_KEY), C.DEDUP_KEY)
+            buckets = ledger.buckets
             state = self.store.read(child)
             state_aff = state.filter(F.col(C.PARTITION_BUCKET).isin(buckets))
+            # null-safe like every keyed match: a null key is one key
+            seen = state_aff.select(F.col(C.DEDUP_KEY).alias("_sk"))
+            key, sk = F.col(C.DEDUP_KEY), F.col("_sk")
             new = reps.join(
-                state_aff.select(C.DEDUP_KEY), C.DEDUP_KEY, "left_anti"
-            )
+                seen, key.eqNullSafe(sk) if ledger.has_null else key == sk, "left_anti")
             staged = self._stage_nonempty(
                 child, self._with_bucket(self._with_entry_id(new), C.DEDUP_KEY)
             )
@@ -988,19 +986,18 @@ class Engine:
                 # keys that lost their representative: re-derive from the
                 # remaining parent rows (parent state is already committed
                 # minus the deleted rows at this point in the cascade)
-                lost = dd.select(C.DEDUP_KEY).distinct()
-                parent_rows = self.store.read(parent)
-                cand = (
-                    parent_rows.withColumn(C.DEDUP_KEY, dedup_tr_op.key_expr(tr.key))
-                    .join(_keyset(lost), C.DEDUP_KEY, "left_semi")
-                    .drop(C.DEDUP_KEY)
-                )
+                lost = self._ledger(child, dd.select(C.DEDUP_KEY), C.DEDUP_KEY)
+                buckets2 = lost.buckets
+                cand = self._match(
+                    self.store.read(parent).withColumn(
+                        C.DEDUP_KEY, dedup_tr_op.key_expr(tr.key)),
+                    C.DEDUP_KEY, lost, "left_semi",
+                ).drop(C.DEDUP_KEY)
                 reps = dedup_tr_op.representatives(tr, cand)
                 staged2 = self._stage_nonempty(
                     child, self._with_bucket(self._with_entry_id(reps), C.DEDUP_KEY)
                 )
                 if staged2 is not None:
-                    buckets2 = self._affected_buckets(child, lost, C.DEDUP_KEY)
                     state2 = self.store.read(child).filter(
                         F.col(C.PARTITION_BUCKET).isin(buckets2)
                     )
@@ -1039,17 +1036,22 @@ class Engine:
             return None
         both = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
         net = both.groupBy(C.DISTINCT_KEY).agg(F.sum("_n").alias("_net"))
-        keys = net.select(C.DISTINCT_KEY)
-        buckets = self._affected_buckets(child, keys, C.DISTINCT_KEY)
+        ledger = self._ledger(child, net, C.DISTINCT_KEY)
+        buckets = ledger.buckets
         state = self.store.read(child)
         state_aff = state.filter(F.col(C.PARTITION_BUCKET).isin(buckets))
-        old = state_aff.join(_keyset(keys), C.DISTINCT_KEY, "left_semi")
-        # affected-key ledger: old count (if any) + this commit's net.
-        # localCheckpoint: four branches read it; the ledger is delta-sized.
-        j = net.join(
+        # the affected keys' current rows, staged once: every branch below
+        # reads them instead of the state (an empty relation when none)
+        old = self._stage_nonempty(
+            child, self._match(state_aff, C.DISTINCT_KEY, ledger, "left_semi"))
+        if old is None:
+            old = state_aff.limit(0)
+        # the ledger with each key's old count (if any), staged: four
+        # branches read it
+        j = self.store.stage(child, ledger.rows.join(
             old.select(C.DISTINCT_KEY, F.col(C.REF_COUNT).alias("_old")),
             C.DISTINCT_KEY, "left",
-        ).localCheckpoint()
+        ))
         out = Delta()
         # births: tuple unseen before, net > 0 → first arrival represents
         birth_keys = j.filter(F.col("_old").isNull() & (F.col("_net") > 0))
@@ -1064,12 +1066,9 @@ class Engine:
                 return None
             births = (
                 distinct_tr_op.representatives(tr, d.inserts)
-                .join(_keyset(birth_keys.select(C.DISTINCT_KEY)),
-                      C.DISTINCT_KEY, "inner")
                 .join(_keyset(birth_keys.select(C.DISTINCT_KEY, "_net")),
                       C.DISTINCT_KEY)
-                .withColumn(C.REF_COUNT, F.col("_net"))
-                .drop("_net")
+                .withColumnRenamed("_net", C.REF_COUNT)
             )
             return self._stage_nonempty(
                 child,
@@ -1081,7 +1080,7 @@ class Engine:
                 child, old.join(_keyset(death_keys), C.DISTINCT_KEY, "left_semi")
             )
 
-        # birth and death stagings both read the checkpointed ledger —
+        # birth and death stagings both read the staged ledger —
         # independent Spark actions, overlapped (guide §2.6)
         staged_b, staged_d = self._concurrent(stage_births, stage_deaths)
         if staged_b is not None:
@@ -1103,7 +1102,7 @@ class Engine:
             F.col("_old").isNotNull() & (F.col("_net") == 0)
         ).select(C.DISTINCT_KEY)
         kept = old.join(_keyset(same_keys), C.DISTINCT_KEY, "left_semi")
-        rest = state_aff.join(_keyset(keys), C.DISTINCT_KEY, "left_anti")
+        rest = self._match(state_aff, C.DISTINCT_KEY, ledger, "left_anti")
         new_state = rest.unionByName(updated.select(*rest.columns)).unionByName(
             kept.select(*rest.columns)
         )
@@ -1135,11 +1134,11 @@ class Engine:
                 self._with_entry_id(topk_tr_op.to_child(tr, d.inserts)),
                 C.GROUP_KEY,
             )
-            keys = cand.select(C.GROUP_KEY).distinct()
-            buckets = self._affected_buckets(child, keys, C.GROUP_KEY)
+            ledger = self._ledger(child, cand.select(C.GROUP_KEY), C.GROUP_KEY)
+            buckets = ledger.buckets
             state = self.store.read(child)
             state_aff = state.filter(F.col(C.PARTITION_BUCKET).isin(buckets))
-            old = state_aff.join(_keyset(keys), C.GROUP_KEY, "left_semi")
+            old = self._match(state_aff, C.GROUP_KEY, ledger, "left_semi")
             cols = self.tables[child].schema.fieldNames()
             u = (
                 old.select(*cols).withColumn("_new", F.lit(False))
@@ -1189,15 +1188,15 @@ class Engine:
                 # restricted to those groups; rows already present are
                 # excluded by provenance so only genuinely promoted rows
                 # stage — survivors are never evicted by a shrinking set
-                lost = dd.select(C.GROUP_KEY).distinct()
-                buckets2 = self._affected_buckets(child, lost, C.GROUP_KEY)
+                lost = self._ledger(child, dd.select(C.GROUP_KEY), C.GROUP_KEY)
+                buckets2 = lost.buckets
                 state2 = self.store.read(child).filter(
                     F.col(C.PARTITION_BUCKET).isin(buckets2)
                 )
-                current = state2.join(_keyset(lost), C.GROUP_KEY, "left_semi")
+                current = self._match(state2, C.GROUP_KEY, lost, "left_semi")
                 cand2 = (
-                    topk_tr_op.to_child(tr, self.store.read(parent))
-                    .join(_keyset(lost), C.GROUP_KEY, "left_semi")
+                    self._match(topk_tr_op.to_child(tr, self.store.read(parent)),
+                                C.GROUP_KEY, lost, "left_semi")
                     .join(
                         _keyset(current.select(C.SOURCE_ENTRY_ID)),
                         C.SOURCE_ENTRY_ID, "left_anti",
@@ -1291,8 +1290,8 @@ class Engine:
         (listener_hook.rs:56-84 hands deltas to a channel, the TCP
         writer drains it): the delta is snapshotted in-commit to a
         staging parquet dir (version flips may delete the delta's
-        backing files before a slow drain reads them; staging keeps the
-        snapshot executor-side, so a 100 TB bulk ``insert_df`` commit
+        backing files before a slow drain reads them; the store writes a
+        bulk ``insert_df`` commit's snapshot with Spark's writer, so it
         never materializes on the driver) and a daemon drain thread
         re-reads it and invokes the callbacks, so a slow subscriber
         cannot stall commit throughput. One snapshot is written per
@@ -1402,15 +1401,12 @@ class Engine:
                 # snapshot NOW: the delta DataFrame is backed by this
                 # version's parquet files, which a later version flip /
                 # compaction may delete before the drain thread
-                # evaluates the plan. The snapshot is a staging parquet
-                # write (executor-side — a bulk insert_df commit of any
-                # size never lands on the driver; for tiny commits the
-                # write job costs the same order as the collect job it
-                # replaced, and the re-read runs on the drain thread,
-                # off the commit path), written ONCE per (table, event,
-                # commit) and shared by every async subscriber; the
-                # drain thread re-reads it, fans out the callbacks,
-                # then deletes the staging dir.
+                # evaluates the plan. The snapshot is a store write
+                # (delta-sized on the driver, a bulk insert_df commit by
+                # Spark's writer, so it never lands on the driver),
+                # written ONCE per (table, event, commit) and shared by
+                # every async subscriber; the drain thread re-reads it,
+                # fans out the callbacks, then deletes the staging dir.
                 # Commit-boundary backlog reap (ADVICE r7): an engine
                 # that subscribes but never calls flush_listeners()
                 # must not accumulate delivered snapshots for the
@@ -1428,7 +1424,7 @@ class Engine:
                 path = os.path.join(
                     self._listen_stage_root, f"{table}-{event}-{_uuid.uuid4().hex}"
                 )
-                clean.write.mode("overwrite").parquet(path)
+                self.store.write(clean, path)
                 self._listen_staged += 1
                 self._ensure_dispatcher().put((async_cbs, path, clean.schema))
             for cb in sync_cbs:

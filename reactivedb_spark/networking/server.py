@@ -23,6 +23,8 @@ import socketserver
 import threading
 from typing import Optional
 
+import pyarrow.parquet as pq
+
 from reactivedb_spark.engine import Delta, Engine
 from reactivedb_spark.networking import wire
 
@@ -172,15 +174,18 @@ class ReactiveDBServer:
 
     def _committed_entries(self, report: dict[str, Delta]) -> list:
         """All committed edit entries across the cascade — the reference
-        returns the same (db_thread.rs:82-93, database.rs:189-194)."""
+        returns the same (db_thread.rs:82-93, database.rs:189-194). Every
+        delta is parquet the store wrote, so its rows are read from those
+        files on the driver, without a Spark job."""
         out = []
         for _table, delta in report.items():
             for df in (delta.inserts, delta.deletes):
-                if df is not None:
-                    out.extend(
-                        wire.row_to_entry(r.asDict(recursive=True))
-                        for r in df.drop("_seq", "_kb").collect()
-                    )
+                if df is None:
+                    continue
+                cols = [c for c in df.columns if c not in ("_seq", "_kb")]
+                for f in df.inputFiles():
+                    tbl = pq.ParquetFile(f.replace("file:", "")).read(columns=cols)
+                    out.extend(wire.row_to_entry(r) for r in tbl.to_pylist())
         return out
 
     # -- listen ------------------------------------------------------------

@@ -11,10 +11,23 @@ atomic per commit and keeps readers of the old version valid. On a real
 cluster this layer is Delta Lake/Iceberg (``MERGE INTO`` + CDF); the
 engine's API is shaped so only this module would change.
 
-Every write goes through a staged parquet round-trip, which **pins
-nondeterministic values** (``uuid()`` entry ids) before anything
-downstream references them — re-evaluating a lazy plan would otherwise
-regenerate them (SURVEY.md §7 hard-problem #1 neighbor).
+Every write goes through one primitive, :meth:`ParquetSnapshotStore.write`,
+and lands as parquet that is read back, which **pins nondeterministic
+values** (``uuid()`` entry ids) before anything downstream references
+them — re-evaluating a lazy plan would otherwise regenerate them
+(SURVEY.md §7 hard-problem #1 neighbor).
+
+Delta-sized writes bypass Spark's writer and its Hadoop output committer:
+a frame whose Catalyst size estimate fits :data:`DRIVER_WRITE_LIMIT` is
+collected once as Arrow and written with ``pyarrow.parquet`` under a
+temporary name, then renamed into place. A reactive commit writes a
+handful of rows many times; through Spark each write paid committer job
+setup and commit (task attempt dirs, renames) and, where Hadoop's local
+filesystem runs without its native library, a forked ``chmod`` process
+per directory and file the committer creates — ~170-210 ms for a 5-row
+write against ~28 ms through Arrow. Frames above the limit or of unknown
+size keep the distributed writer, the only path for data larger than
+the driver.
 """
 
 from __future__ import annotations
@@ -23,7 +36,73 @@ import os
 import shutil
 import uuid as _uuid
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, types as T
+from pyspark.sql.pandas.serializers import ArrowCollectSerializer
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.util import _load_from_socket
+
+# Largest optimized-plan size estimate (Catalyst ``stats.sizeInBytes``,
+# the figure Spark's own broadcast decisions use) written on the driver.
+# The estimate needs no job but is not an upper bound on the data: a
+# parquet scan reports its compressed file bytes, a filter keeps its
+# child's size and a projection scales by default type widths (20 bytes
+# a string), so a collected frame holds 2-6x its estimate in Arrow
+# (2.1x for engine tables, whose ids are uuids; 5.7x for an insert_df
+# batch that adds them). Joins other than semi/anti report the product
+# of their sides, and a plan Spark cannot size the maximal default, so
+# such plans stay on the distributed writer. Against Spark's writer at
+# local[4] the driver saved 0.1-0.4 s a write (the committer's fixed
+# cost) up to estimates of 12 MB and broke even near 25-35 MB of
+# insert_df batch, but it holds the whole frame in Python. 4 MB keeps
+# a driver write under ~25 MB of Arrow and covers every write of a
+# one-row commit (the largest, 3.8 MB, is a Distinct partition rewrite
+# whose estimate a join inflates). Those join products grow with the
+# delta, so a commit of ten or more rows sends one to three of its
+# writes to Spark's writer.
+DRIVER_WRITE_LIMIT = 4 << 20
+
+
+def _collect_if_small(df: DataFrame) -> pa.Table | None:
+    """``df`` as one driver-side Arrow table when its size estimate fits
+    :data:`DRIVER_WRITE_LIMIT`, else None.
+
+    The collect is ``DataFrame.toArrow``'s protocol as PySpark 4.1
+    implements it (``_collect_as_arrow``: ``collectAsArrowToPython``, the
+    batches and their order read with ``ArrowCollectSerializer``, then the
+    serving thread joined), run on a Dataset of its own whose py4j
+    proxies — the Dataset's and the serving socket's — are detached as
+    soon as the batches are in. A proxy whose methods were called sits in
+    a reference cycle until Python's full cyclic GC, and one of the
+    collected Dataset would keep its executed plan alive, with every
+    broadcast relation of its joins holding a full memory page, long
+    after the write."""
+    if df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() > DRIVER_WRITE_LIMIT:
+        return None
+    gateway = df.sparkSession.sparkContext._gateway
+    jdf = df.select("*")._jdf
+    port, secret, server = jdf.collectAsArrowToPython()
+    try:
+        # record batches in arrival order, then their partition order
+        *batches, order = _load_from_socket((port, secret), ArrowCollectSerializer())
+    except BaseException as e:
+        # the read error is the one raised; the serving thread's rides
+        # along as a note
+        try:
+            server.getResult()
+        except Exception as err:
+            e.add_note(f"Arrow collect serving thread: {err}")
+        raise
+    else:
+        server.getResult()  # raises the collect job's error, if any
+    finally:
+        gateway.detach(server)
+        gateway.detach(jdf)
+    if not batches:
+        return to_arrow_schema(df.schema).empty_table()
+    return pa.Table.from_batches([batches[i] for i in order])
 
 
 class ParquetSnapshotStore:
@@ -160,11 +239,6 @@ class ParquetSnapshotStore:
                 return True
         return False
 
-    def is_empty(self, name: str) -> bool:
-        """No committed files for ``name`` — answered from the filesystem,
-        no Spark job."""
-        return not self._has_files(self._dir(name))
-
     # -- reads -------------------------------------------------------------
     def read(self, name: str) -> DataFrame:
         """Current state as a DataFrame. Memoized per (table, version,
@@ -178,7 +252,9 @@ class ParquetSnapshotStore:
             1 for _r, _d, fs in os.walk(path) for f in fs if f.endswith(".parquet")
         ) if os.path.isdir(path) else 0
         if n_files == 0:
-            return self.spark.createDataFrame([], schema)
+            # a local relation, sized 0 for the write gate's estimate
+            return self.spark.createDataFrame(pa.Table.from_pylist(
+                [], schema=to_arrow_schema(schema)))
         key = (name, self._versions[name], n_files)
         df = self._read_cache.get(key)
         if df is None:
@@ -211,94 +287,90 @@ class ParquetSnapshotStore:
         return self.spark.read.schema(self._schemas[name]).parquet(path)
 
     # -- writes ------------------------------------------------------------
-    def stage(self, name: str, df: DataFrame) -> DataFrame:
-        """Materialize a delta to scratch parquet and read it back (pins
-        uuids / nondeterministic expressions)."""
-        path = os.path.join(self.root, "_staging", name, _uuid.uuid4().hex)
-        df.write.mode("overwrite").parquet(path)
-        return self.spark.read.schema(self._schemas[name]).parquet(path)
+    def write(self, data, path: str, partition_col: str | None = None) -> list[str]:
+        """The one write primitive: land ``data`` (a DataFrame, or a
+        pyarrow Table already on the driver) as parquet files under
+        ``path``, split into ``<partition_col>=<v>`` dirs when given, and
+        return the paths of the files written (none for an empty frame).
 
-    def stage_count(self, path_or_df) -> int:
-        """Row count of a staged delta from parquet footers — no Spark job."""
-        import pyarrow.parquet as pq
-
-        files = getattr(path_or_df, "inputFiles", None)
-        paths = [p.replace("file:", "") for p in path_or_df.inputFiles()] if files else [path_or_df]
-        total = 0
-        for p in paths:
-            if os.path.isdir(p):
-                for f in os.listdir(p):
-                    if f.endswith(".parquet"):
-                        total += pq.read_metadata(os.path.join(p, f)).num_rows
-            elif p.endswith(".parquet"):
-                total += pq.read_metadata(p).num_rows
-        return total
-
-    def append_rows(self, name: str, tbl) -> tuple[DataFrame | None, int]:
-        """Append a driver-side pyarrow Table as one parquet file in the
-        current version dir — ZERO Spark jobs for the write (the file
-        lands via ``pyarrow.parquet.write_table``; entry ids / ``_seq``
-        were generated driver-side, so there is no nondeterminism to
-        pin). The returned delta DataFrame reads exactly the new file,
-        same contract as :meth:`append_delta`. Row-list ``insert()``
-        commits are driver-latency-bound (a one-row commit paid a full
-        Spark write job, ~0.3-0.5 s); this is the per-row write path's
-        fixed-overhead fix (guide §2.1) — bulk ``insert_df`` stays on
-        :meth:`append_delta`."""
-        if tbl.num_rows == 0:
-            return None, 0
-        path = self._dir(name)
-        os.makedirs(path, exist_ok=True)
-        import pyarrow.parquet as pq
-
-        # write outside the version dir, then rename in: a failed write
-        # must not leave a half-file that a fallback append would
-        # double-count (readers glob *.parquet in the version dir)
-        fname = f"part-pa-{_uuid.uuid4().hex}.parquet"
-        tmp = os.path.join(path, fname + ".tmp")
-        try:
-            pq.write_table(tbl, tmp)
-        except Exception:
+        A DataFrame whose optimized-plan size estimate fits
+        :data:`DRIVER_WRITE_LIMIT` is collected once as Arrow and written
+        with pyarrow; larger frames and frames of unknown size keep
+        Spark's distributed writer, the only path for data larger than
+        the driver."""
+        tbl = data if isinstance(data, pa.Table) else _collect_if_small(data)
+        if tbl is None:
+            before = self._list_rel(path)
+            writer = data.write.mode("append")
+            if partition_col:
+                writer = writer.partitionBy(partition_col)
+            writer.parquet(path)
+            return [os.path.join(path, r) for r in sorted(self._list_rel(path) - before)]
+        if partition_col is None:
+            parts = [(path, tbl)]
+        else:
+            col = tbl.column(partition_col)
+            if col.null_count:
+                raise ValueError(f"null {partition_col!r} partition value")
+            rest = tbl.drop_columns([partition_col])
+            parts = [
+                (os.path.join(path, f"{partition_col}={v}"),
+                 rest.filter(pc.equal(col, v)))
+                for v in pc.unique(col).to_pylist()
+            ]
+        # row groups sized like Spark's writer would size them
+        # (``parquet.block.size``), so data skipping sees the same layout
+        block = self.spark.sparkContext._jsc.hadoopConfiguration().getLong(
+            "parquet.block.size", 128 << 20)
+        files = []
+        for d, part in parts:
+            if part.num_rows == 0:
+                continue
+            os.makedirs(d, exist_ok=True)
+            fname = f"part-pa-{_uuid.uuid4().hex}.parquet"
+            # a dot name is invisible to readers until the rename, so a
+            # failed write never leaves a half-file in a table dir
+            tmp = os.path.join(d, f".{fname}.tmp")
             try:
-                os.remove(tmp)
-            except OSError:
-                pass
-            raise
-        os.replace(tmp, os.path.join(path, fname))
-        delta = self.spark.read.schema(self._schemas[name]).parquet(
-            os.path.join(path, fname)
-        )
-        n_files = sum(
-            1 for f in os.listdir(path) if f.endswith(".parquet")
-        )
-        if n_files > self.compact_threshold:
-            if self._txn is None:
-                self.replace(name, self.read(name).coalesce(
-                    max(1, n_files // 32)))
-            else:
-                self._txn["compact"].add(name)
-        return delta, tbl.num_rows
+                pq.write_table(part, tmp, row_group_size=max(
+                    1, block * part.num_rows // max(part.nbytes, 1)))
+            except BaseException:
+                try:
+                    os.remove(tmp)
+                except OSError:
+                    pass
+                raise
+            os.replace(tmp, os.path.join(d, fname))
+            files.append(os.path.join(d, fname))
+        return files
 
-    def append_delta(self, name: str, df: DataFrame) -> tuple[DataFrame | None, int]:
-        """Write a delta directly into the table's current version dir (one
-        write job — no staging double-write) and return (materialized
-        delta over exactly the new files, row count). Returns (None, 0)
-        for an empty delta; the count comes from parquet footers, not a
-        Spark job."""
+    @staticmethod
+    def num_rows(files) -> int:
+        """Row count of parquet files from their footers — no Spark job."""
+        return sum(pq.read_metadata(f).num_rows for f in files)
+
+    def stage(self, name: str, df: DataFrame,
+              partition_col: str | None = None) -> DataFrame | None:
+        """Materialize a frame to scratch parquet and read it back (pins
+        uuids / nondeterministic expressions); None when it holds no
+        rows."""
+        path = os.path.join(self.root, "_staging", name, _uuid.uuid4().hex)
+        if not self.num_rows(self.write(df, path, partition_col)):
+            return None
+        return self.spark.read.schema(df.schema).parquet(path)
+
+    def append_delta(self, name: str, data) -> tuple[DataFrame | None, int]:
+        """Write a delta (a DataFrame, or a driver-side pyarrow Table of
+        the table's schema) directly into the table's current version
+        dir — no staging double-write — and return (materialized delta
+        over exactly the new files, row count). Returns (None, 0) for an
+        empty delta; the count comes from parquet footers, not a Spark
+        job."""
         path = self._dir(name)
-        os.makedirs(path, exist_ok=True)
-        before = {f for f in os.listdir(path) if f.endswith(".parquet")}
-        df.select(*self._schemas[name].fieldNames()).write.mode("append").parquet(path)
-        new_files = [
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".parquet") and f not in before
-        ]
-        if not new_files:
-            return None, 0
-        import pyarrow.parquet as pq
-
-        n = sum(pq.read_metadata(f).num_rows for f in new_files)
+        if isinstance(data, DataFrame):
+            data = data.select(*self._schemas[name].fieldNames())
+        new_files = self.write(data, path)
+        n = self.num_rows(new_files)
         if n == 0:
             return None, 0
         delta = self.spark.read.schema(self._schemas[name]).parquet(*new_files)
@@ -310,13 +382,17 @@ class ParquetSnapshotStore:
         # end_commit, which compacts only tables not version-flipped during
         # the commit — keeping returned deltas one retained generation away
         # from any deletion.
-        all_files = before | {os.path.basename(f) for f in new_files}
-        if len(all_files) > self.compact_threshold:
+        n_files = sum(1 for f in os.listdir(path) if f.endswith(".parquet"))
+        if n_files > self.compact_threshold:
             if self._txn is None:
-                self.replace(name, self.read(name).coalesce(max(1, len(all_files) // 32)))
+                self.replace(name, self.read(name).coalesce(max(1, n_files // 32)))
             else:
                 self._txn["compact"].add(name)
         return delta, n
+
+    # A name only (``perfbench/tracing.py`` wraps it): every append,
+    # row-list inserts included, is append_delta.
+    append_rows = append_delta
 
     # INVARIANT: every path that lands files in a table's CURRENT version
     # dir must be followed by save_meta() (normally via end_commit) before
@@ -325,34 +401,36 @@ class ParquetSnapshotStore:
     # deliberately no bare append() here (ADVICE r12): a non-transactional
     # in-place write would be silently reaped on the next open.
 
-    def replace(self, name: str, df: DataFrame, partition_by: list | None = None) -> None:
+    def _next_dir(self, name: str) -> tuple[int, str]:
         nxt = self._versions[name] + 1
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(self._dir(name, nxt))
+        path = self._dir(name, nxt)
+        shutil.rmtree(path, ignore_errors=True)
+        os.makedirs(path)
+        return nxt, path
+
+    def replace(self, name: str, df: DataFrame, partition_col: str | None = None) -> None:
+        nxt, path = self._next_dir(name)
+        self.write(df, path, partition_col)
         self._flip(name, nxt)
 
     def replace_partitions(self, name: str, df: DataFrame,
-                           partition_by: list, values: list) -> None:
-        """Rewrite ONLY the partition dirs named by ``values`` (single
-        partition column); every other partition of the current version is
-        hardlinked into the next version dir — zero data I/O for untouched
-        buckets, while keeping full snapshot isolation and rollback (the
-        old version dir stays intact one generation back). This is the
-        reference's per-key upsert economics (storage_manager_table.rs:
-        26-64) at Spark scale; on a real cluster this layer is Delta
-        ``MERGE``/``replaceWhere``, which is the same partition-scoped
-        commit expressed as table-format metadata.
+                           partition_col: str, values: list) -> None:
+        """Rewrite ONLY the partition dirs named by ``values``; every other
+        partition of the current version is hardlinked into the next
+        version dir — zero data I/O for untouched buckets, while keeping
+        full snapshot isolation and rollback (the old version dir stays
+        intact one generation back). This is the reference's per-key
+        upsert economics (storage_manager_table.rs:26-64) at Spark scale;
+        on a real cluster this layer is Delta ``MERGE``/``replaceWhere``,
+        which is the same partition-scoped commit expressed as
+        table-format metadata.
 
         ``df`` must contain only rows belonging to the affected
         partitions."""
-        col = partition_by[0]
-        nxt = self._versions[name] + 1
-        new_dir = self._dir(name, nxt)
+        nxt, new_dir = self._next_dir(name)
         old_dir = self._dir(name)
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(new_dir)
-        affected = {f"{col}={v}" for v in values}
+        self.write(df, new_dir, partition_col)
+        affected = {f"{partition_col}={v}" for v in values}
         if os.path.isdir(old_dir):
             for d in os.listdir(old_dir):
                 src = os.path.join(old_dir, d)
@@ -415,15 +493,15 @@ class ParquetSnapshotStore:
                 n_files = sum(
                     1 for _r, _d, fs in os.walk(path) for f in fs if f.endswith(".parquet")
                 )
-                part_cols = sorted(
-                    {d.split("=")[0] for d in os.listdir(path)
-                     if "=" in d and os.path.isdir(os.path.join(path, d))}
-                )
+                part_col = next(
+                    (d.split("=")[0] for d in os.listdir(path)
+                     if "=" in d and os.path.isdir(os.path.join(path, d))),
+                    None)
                 if n_files > self.compact_threshold:
                     self.replace(
                         name,
                         self.read(name).coalesce(max(1, n_files // 32)),
-                        partition_by=part_cols or None,
+                        partition_col=part_col,
                     )
         finally:
             self._txn = None
