@@ -13,13 +13,24 @@ DataFrame filters with the reference's declared semantics — ``less_than``
 strict ``<``, ``greater_than`` inclusive ``>=``, results in ascending key
 order (B+tree leaf order).
 
-Scale notes: every per-table step is one or two narrow/shuffle stages;
-affected-key semi-joins broadcast only below a staged-delta size gate
-(``_keyset``) — bulk ``insert_df`` batches above it stay unhinted so AQE
-picks the join strategy; no driver-side row loops anywhere.
-At cluster scale the store becomes Delta (MERGE instead of
-version-flipping) and propagation runs inside ``foreachBatch``
-(streaming/listen.py).
+Local commit path: a child whose inputs — the parent's delta files and
+the files of the ``_kb`` buckets it touches — hold at most 1 MB of
+parquet, a quarter of ``store.DRIVER_WRITE_LIMIT``, is computed on the
+driver. This covers Function and Filter inserts, Distinct, and
+Aggregation's decomposable insert-only merge. Spark still evaluates
+every expression, as projections over local relations that Catalyst
+folds, so the path runs no Spark job; pyarrow does the keyed grouping,
+key lookups and first-arrival picks, and the output lands through the
+store's Arrow writer. The choice is made per child at commit time from those byte
+counts alone; everything else, and every input over the limit, runs the
+Spark plans below.
+
+Scale notes: every per-table step of the Spark plans is one or two
+narrow/shuffle stages; affected-key semi-joins broadcast only below a
+staged-delta size gate (``_keyset``) — bulk ``insert_df`` batches above
+it stay unhinted so AQE picks the join strategy. At cluster scale the
+store becomes Delta (MERGE instead of version-flipping) and propagation
+runs inside ``foreachBatch`` (streaming/listen.py).
 """
 
 from __future__ import annotations
@@ -32,11 +43,14 @@ from dataclasses import dataclass
 from typing import Callable, Optional
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from reactivedb_spark import constants as C
+from reactivedb_spark import local_commit as local
+from reactivedb_spark import store as store_mod
 from reactivedb_spark.config import (
     ActionTransformConfig,
     AggregationTransformConfig,
@@ -74,7 +88,7 @@ from reactivedb_spark.operators import topk_transform as topk_tr_op
 from reactivedb_spark.operators import union as union_op
 from reactivedb_spark.plans.dag import topo_order
 from reactivedb_spark.stats import broadcast_if_small
-from reactivedb_spark.store import ParquetSnapshotStore
+from reactivedb_spark.store import ParquetSnapshotStore, collect_rows, conform, read_files
 from reactivedb_spark.types import parse_type
 
 # Keyed merge paths join the batch's distinct key set against committed
@@ -93,6 +107,15 @@ _DELTA_BROADCAST_LIMIT = 32 << 20  # staged delta parquet bytes
 # any engine over the workspace regardless of pid liveness (PID reuse).
 _SPENT_STAGE_REAP = 64
 _STAGE_MAX_AGE_S = 24 * 3600
+# returned by a local-path apply whose inputs turned out not to fit
+_SPARK_PATH = object()
+
+
+def _local_limit() -> int:
+    """Parquet bytes of a child's inputs that the local commit path takes:
+    a quarter of ``store.DRIVER_WRITE_LIMIT``, below the measured
+    crossover with the Spark plans (see the constant's comment)."""
+    return store_mod.DRIVER_WRITE_LIMIT >> 2
 
 
 def _pid_alive(pid: int) -> bool:
@@ -192,6 +215,8 @@ class Engine:
                 self.register_action(name, fn)
         self._seq = 1
         self._listeners: dict[str, list] = {}
+        # per local-path child, its projection Columns (see _built_once)
+        self._local_columns: dict[str, object] = {}
         import threading as _threading
 
         self._dispatch_q = None  # lazy async-listener drain queue
@@ -365,10 +390,14 @@ class Engine:
             C.PARTITION_BUCKET, self._bucket_of(F.col(key_column)).cast("int")
         )
 
-    def _stage_nonempty(self, table: str, df: DataFrame,
+    def _stage_nonempty(self, table: str, data,
                         partition_col: Optional[str] = None) -> Optional[DataFrame]:
-        return self.store.stage(
-            table, df.select(*self.tables[table].schema.fieldNames()), partition_col)
+        """Stage a frame, or a driver-side Arrow table, in ``table``'s
+        layout; None when it holds no rows."""
+        schema = self.tables[table].schema
+        data = (conform(data, to_arrow_schema(schema)) if isinstance(data, pa.Table)
+                else data.select(*schema.fieldNames()))
+        return self.store.stage(table, data, partition_col)
 
     @staticmethod
     def _max_seq_from_paths(paths) -> Optional[int]:
@@ -555,13 +584,11 @@ class Engine:
         return self._commit(work)
 
     # -- propagation -------------------------------------------------------
-    @staticmethod
-    def _staged_bytes(d: "Delta") -> int:
+    def _staged_bytes(self, d: "Delta") -> int:
         """Total staged parquet bytes of a delta (local file sizes, no
         Spark job)."""
-        return sum(os.path.getsize(f.replace("file:", ""))
-                   for df in (d.inserts, d.deletes) if df is not None
-                   for f in df.inputFiles())
+        return sum(self._file_bytes(self._files(df))
+                   for df in (d.inserts, d.deletes) if df is not None)
 
     def _propagation_shuffle(self, seed: dict[str, Delta]):
         """Size the propagation wave's shuffles to the DELTA, not the
@@ -686,27 +713,214 @@ class Engine:
 
     def _apply_rowwise(self, child: str, tr, d: Delta) -> Optional[Delta]:
         """Function / Filter / Action: per-row derivation appends; deletes
-        cascade by provenance."""
+        cascade by provenance. A Function or Filter delta whose parent
+        delta files fit the limit takes the local path."""
         out = Delta()
         if d.inserts is not None:
-            if isinstance(tr, FunctionTransformConfig):
-                derived = function_op.apply_delta(tr, d.inserts)
-            elif isinstance(tr, FilterTransformConfig):
-                derived = filter_op.apply_delta(tr, d.inserts)
-            elif isinstance(tr, SampleTransformConfig):
-                derived = sample_tr_op.apply_delta(tr, d.inserts)
-            elif isinstance(tr, ChunkTransformConfig):
-                derived = chunk_tr_op.apply_delta(tr, d.inserts)
-            elif isinstance(tr, TextStatsTransformConfig):
-                derived = textstats_tr_op.apply_delta(tr, d.inserts)
-            else:
+            op = {FunctionTransformConfig: function_op, FilterTransformConfig: filter_op,
+                  SampleTransformConfig: sample_tr_op, ChunkTransformConfig: chunk_tr_op,
+                  TextStatsTransformConfig: textstats_tr_op}.get(type(tr))
+            if op is None:
                 act = self._actions[tr.name]
-                derived = action_op.apply_delta(tr, act, d.inserts, self.tables[child].schema)
-            staged, _n = self.store.append_delta(child, self._with_entry_id(derived))
+
+                def derive(df):
+                    return action_op.apply_delta(tr, act, df, self.tables[child].schema)
+            else:
+                def derive(df):
+                    return op.apply_delta(tr, df)
+            files = self._files(d.inserts)
+            if (op in (function_op, filter_op)
+                    and self._file_bytes(files) <= _local_limit()):
+                schema = d.inserts.schema
+                if op is function_op:
+                    cols = self._built_once(child, lambda: function_op.columns(tr, schema))
+
+                    def project(df):
+                        return df.select(*cols)
+                else:
+                    pred, cols = self._built_once(child, lambda: (
+                        filter_op.predicate(tr, schema), filter_op.columns(schema)))
+
+                    def project(df):
+                        return df.filter(pred).select(*cols)
+                derived = local.with_entry_ids(local.project(
+                    self.spark, read_files(files, schema), project, schema))
+            else:
+                derived = self._with_entry_id(derive(d.inserts))
+            staged, _n = self.store.append_delta(child, derived)
             if staged is not None:
                 out.inserts = staged
         if d.deletes is not None:
             out.deletes = self._delete_by_provenance(child, d.deletes)
+        return out if (out.inserts is not None or out.deletes is not None) else None
+
+    # -- the local commit path ----------------------------------------------
+    # A child is computed on the driver when its inputs fit
+    # _local_limit() by parquet bytes: the parent's delta files and
+    # the files of the _kb buckets the child touches. Its output lands
+    # through the store's Arrow writer, so its own children can take the
+    # path too. Spark evaluates every expression over local relations,
+    # which it folds, so the path runs no Spark job (local_commit.py).
+
+    def _built_once(self, child: str, build: Callable[[], object]):
+        """``build()``'s Columns for a local-path child, built on its first
+        commit and reused after: building a Column costs a py4j call per
+        expression node, hundreds for an aggregation's merge. A child's
+        parent schema never changes, so neither do its Columns."""
+        cols = self._local_columns.get(child)
+        if cols is None:
+            cols = self._local_columns[child] = build()
+        return cols
+
+    @staticmethod
+    def _files(df: DataFrame) -> list:
+        return [f.replace("file:", "") for f in df.inputFiles()]
+
+    @staticmethod
+    def _file_bytes(files) -> int:
+        return sum(os.path.getsize(f) for f in files)
+
+    def _bucket_rows(self, child: str, kb, budget: int):
+        """(rows of ``child``'s ``_kb`` buckets named in ``kb`` as Arrow,
+        the bucket list); no rows when their files pass ``budget``."""
+        buckets = sorted(pc.unique(kb).to_pylist())
+        files = self.store.partition_files(child, C.PARTITION_BUCKET, buckets)
+        if self._file_bytes(files) > budget:
+            return None, buckets
+        return read_files(files, self.tables[child].schema), buckets
+
+    def _replace_keyed_rows(self, child: str, rows: list, key: str,
+                            buckets: list) -> None:
+        """``_replace_keyed`` with the buckets' new rows as Arrow tables,
+        sorted by key as the Spark path's ``sortWithinPartitions``."""
+        tbl = pa.concat_tables(
+            [conform(r, to_arrow_schema(self.tables[child].schema)) for r in rows])
+        self._replace_keyed(child, tbl.take(pc.sort_indices(
+            tbl, [(key, "ascending")], null_placement="at_start")), buckets)
+
+    def _local_aggregation(self, child: str, tr: AggregationTransformConfig,
+                           inserts: DataFrame):
+        """The decomposable insert-only merge on the driver: Spark projects
+        each row's key, bucket and sum terms, pyarrow groups them and
+        finds each group's prior row (null keys are one key), and Spark
+        evaluates the merge (``agg_op.merged_columns``) over the result."""
+        limit = _local_limit()
+        files = self._files(inserts)
+        size = self._file_bytes(files)
+        if size > limit:
+            return _SPARK_PATH
+        schema = inserts.schema
+        K = C.AGGREGATED_COLUMN
+
+        def build():
+            key = F.col(tr.aggregated_column)
+            terms = agg_op.row_terms(tr, schema)
+            mtypes = agg_op.memo_types(tr, schema)
+            return list(terms), [
+                key.alias(K), F.col(C.ENTRY_ID), F.col(C.SEQ),
+                self._bucket_of(key).cast("int").alias(C.PARTITION_BUCKET),
+                *[c.alias(dest) for dest, c in terms.items()],
+            ], [
+                *agg_op.merged_columns(tr, schema, F.col("_matched"),
+                                       lambda dest: F.col(f"_o_{dest}"),
+                                       lambda dest: F.col(dest).cast(mtypes[dest])),
+                F.col(C.PARTITION_BUCKET),
+            ]
+        terms, term_cols, merge_cols = self._built_once(child, build)
+        rows = local.project(self.spark, read_files(files, schema),
+                             lambda df: df.select(*term_cols), schema)
+        state, buckets = self._bucket_rows(child, rows[C.PARTITION_BUCKET], limit - size)
+        if state is None:
+            return _SPARK_PATH
+        # each group's last writer (highest _seq, then entry id) ...
+        last = local.first_rows(rows, K, [(C.SEQ, "descending"),
+                                          (C.ENTRY_ID, "descending")])
+        # ... and its sums, exact on int64 and 38-digit decimals; a null
+        # term poisons its group's sum, as in the sequential fold
+        for dest in terms:
+            t = rows.column(dest).type
+            if pa.types.is_decimal(t):
+                rows = rows.set_column(rows.schema.get_field_index(dest), dest,
+                                       rows.column(dest).cast(pa.decimal128(38, t.scale)))
+        g = rows.group_by(K, use_threads=False).aggregate(
+            [([], "count_all")] + [(dest, "sum") for dest in terms]
+            + [(dest, "count") for dest in terms])
+        g = g.take(local.lookup(last[K], g[K]))
+        prior = local.lookup(last[K], state[K])
+        old = state.take(prior)
+        merge_in = pa.table({
+            K: last[K], C.PARTITION_BUCKET: last[C.PARTITION_BUCKET],
+            C.SOURCE_ENTRY_ID: last[C.ENTRY_ID], C.SEQ: last[C.SEQ],
+            "_matched": pc.if_else(pc.is_valid(prior), True, pa.scalar(None, pa.bool_())),
+            **{dest: pc.if_else(pc.equal(g[f"{dest}_count"], g["count_all"]),
+                                g[f"{dest}_sum"],
+                                pa.scalar(None, g[f"{dest}_sum"].type))
+               for dest in terms},
+            **{f"_o_{dest}": old[dest] for dest in terms},
+        })
+        new_groups = local.with_entry_ids(local.project(
+            self.spark, merge_in, lambda df: df.select(*merge_cols)))
+        replaced = pc.is_valid(local.lookup(state[K], last[K]))
+        staged = self._stage_nonempty(child, new_groups)
+        old_staged = self._stage_nonempty(child, state.filter(replaced))
+        self._replace_keyed_rows(
+            child, [state.filter(pc.invert(replaced)), new_groups], K, buckets)
+        return Delta(inserts=staged, deletes=old_staged)
+
+    def _local_distinct(self, child: str, tr: DistinctTransformConfig, d: Delta):
+        """The refcounted Distinct on the driver: Spark projects each
+        delta row's tuple key and bucket, pyarrow nets the refcounts
+        against the buckets' rows and picks each born tuple's first
+        arrival (lowest ``_seq``, then entry id)."""
+        limit = _local_limit()
+        cols = [C.ENTRY_ID, C.SEQ, *tr.columns]
+        parts, size = [], 0
+        for df, sign in ((d.inserts, 1), (d.deletes, -1)):
+            if df is None:
+                continue
+            files = self._files(df)
+            size += self._file_bytes(files)
+            if size > limit:
+                return _SPARK_PATH
+            t = read_files(files, df.schema).select(cols)
+            parts.append(t.append_column("_n", pa.array([sign] * t.num_rows, pa.int64())))
+            schema = T.StructType([df.schema[c] for c in cols]
+                                  + [T.StructField("_n", T.LongType(), False)])
+        def build():
+            key = distinct_tr_op.key_expr(tr.columns)
+            return [key.alias(C.DISTINCT_KEY),
+                    self._bucket_of(key).cast("int").alias(C.PARTITION_BUCKET)]
+        key_cols = self._built_once(child, build)
+        rows = local.project(self.spark, pa.concat_tables(parts),
+                             lambda df: df.select("*", *key_cols), schema)
+        state, buckets = self._bucket_rows(child, rows[C.PARTITION_BUCKET], limit - size)
+        if state is None:
+            return _SPARK_PATH
+        K, N = C.DISTINCT_KEY, C.REF_COUNT
+        net = rows.group_by(K, use_threads=False).aggregate([("_n", "sum")])
+        # every affected row's refcount moves by its key's net; at zero
+        # the tuple dies
+        moved = pc.add(state[N], pc.fill_null(
+            net["_n_sum"].take(local.lookup(state[K], net[K])), 0))
+        dies = pc.less_equal(moved, 0)
+        survivors = state.set_column(state.schema.get_field_index(N), N, moved)
+        # a tuple with no row and a positive net is born: its first
+        # arrival in the delta represents it
+        born = net.filter(pc.and_(pc.is_null(local.lookup(net[K], state[K])),
+                                  pc.greater(net["_n_sum"], 0)))
+        reps = local.first_rows(rows.filter(pc.greater(rows["_n"], 0)), K,
+                                [(C.SEQ, "ascending"), (C.ENTRY_ID, "ascending")])
+        reps = reps.filter(pc.is_valid(local.lookup(reps[K], born[K])))
+        births = local.with_entry_ids(pa.table({
+            C.SOURCE_ENTRY_ID: reps[C.ENTRY_ID], C.SEQ: reps[C.SEQ], K: reps[K],
+            N: born["_n_sum"].take(local.lookup(reps[K], born[K])),
+            **{c: reps[c] for c in tr.columns},
+            C.PARTITION_BUCKET: reps[C.PARTITION_BUCKET],
+        }))
+        out = Delta(inserts=self._stage_nonempty(child, births),
+                    deletes=self._stage_nonempty(child, state.filter(dies)))
+        self._replace_keyed_rows(
+            child, [survivors.filter(pc.invert(dies)), births], K, buckets)
         return out if (out.inserts is not None or out.deletes is not None) else None
 
     def _ledger(self, child: str, keys: DataFrame, column: str) -> Optional[Ledger]:
@@ -906,6 +1120,10 @@ class Engine:
         rows (groups left empty disappear) — the reference only dropped
         group rows whose last writer happened to be deleted, leaving stale
         aggregates otherwise."""
+        if d.deletes is None and agg_op.exact_sums(tr, d.inserts.schema):
+            out = self._local_aggregation(child, tr, d.inserts)
+            if out is not _SPARK_PATH:
+                return out
         parts = [x.select(F.col(tr.aggregated_column).alias(C.AGGREGATED_COLUMN))
                  for x in (d.inserts, d.deletes) if x is not None]
         keys = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
@@ -1024,6 +1242,9 @@ class Engine:
         transitions emit child deltas (births/deaths); pure refcount
         moves rewrite state rows in place and stay invisible
         downstream."""
+        out = self._local_distinct(child, tr, d)
+        if out is not _SPARK_PATH:
+            return out
         parts = []
         if d.inserts is not None:
             parts.append(distinct_tr_op.delta_counts(tr, d.inserts))
@@ -1261,7 +1482,7 @@ class Engine:
     def find_one(self, table: str, column: str, key) -> Optional[dict]:
         """First row with ``column == key`` (any match — declared contract,
         SURVEY.md Appendix A #10)."""
-        rows = self._keyed_scan(table, column, key).limit(1).collect()
+        rows = collect_rows(self._keyed_scan(table, column, key).limit(1))
         return rows[0].asDict(recursive=True) if rows else None
 
     def get_all(self, table: str, column: str, key) -> DataFrame:
@@ -1424,7 +1645,11 @@ class Engine:
                 path = os.path.join(
                     self._listen_stage_root, f"{table}-{event}-{_uuid.uuid4().hex}"
                 )
-                self.store.write(clean, path)
+                files = self._files(df)
+                self.store.write(
+                    read_files(files, clean.schema)
+                    if self._file_bytes(files) <= store_mod.DRIVER_WRITE_LIMIT
+                    else clean, path)
                 self._listen_staged += 1
                 self._ensure_dispatcher().put((async_cbs, path, clean.schema))
             for cb in sync_cbs:

@@ -18,6 +18,7 @@ lock on the committed snapshot (versioned store keeps them valid).
 
 from __future__ import annotations
 
+import os
 import socket
 import socketserver
 import threading
@@ -27,6 +28,7 @@ import pyarrow.parquet as pq
 
 from reactivedb_spark.engine import Delta, Engine
 from reactivedb_spark.networking import wire
+from reactivedb_spark.store import collect_rows
 
 
 def _ok(payload) -> dict:
@@ -35,6 +37,17 @@ def _ok(payload) -> dict:
 
 def _err(msg: str) -> dict:
     return {"Err": msg}
+
+
+def _file_entries(df) -> list:
+    """Wire entries of a frame over parquet the store wrote, read from its
+    files on the driver with no Spark job, in a Spark scan's order
+    (larger files first)."""
+    cols = [c for c in df.columns if c not in ("_seq", "_kb")]
+    files = sorted((f.replace("file:", "") for f in df.inputFiles()),
+                   key=os.path.getsize, reverse=True)
+    return [wire.row_to_entry(r) for f in files
+            for r in pq.ParquetFile(f).read(columns=cols).to_pylist()]
 
 
 def _malformed(detail: str, rid=None) -> dict:
@@ -158,7 +171,7 @@ class ReactiveDBServer:
                   "GreaterThan": eng.greater_than}[kind]
             df = fn(body["table"], body["column"],
                     wire.entry_value_to_python(body["key"]))
-            rows = [wire.row_to_entry(r.asDict(recursive=True)) for r in df.collect()]
+            rows = [wire.row_to_entry(r.asDict(recursive=True)) for r in collect_rows(df)]
             return {"ManyResults": _ok(rows)}
         if kind == "InsertData":
             entry = wire.entry_to_python(body["entry"])
@@ -177,16 +190,8 @@ class ReactiveDBServer:
         returns the same (db_thread.rs:82-93, database.rs:189-194). Every
         delta is parquet the store wrote, so its rows are read from those
         files on the driver, without a Spark job."""
-        out = []
-        for _table, delta in report.items():
-            for df in (delta.inserts, delta.deletes):
-                if df is None:
-                    continue
-                cols = [c for c in df.columns if c not in ("_seq", "_kb")]
-                for f in df.inputFiles():
-                    tbl = pq.ParquetFile(f.replace("file:", "")).read(columns=cols)
-                    out.extend(wire.row_to_entry(r) for r in tbl.to_pylist())
-        return out
+        return [e for delta in report.values() for df in (delta.inserts, delta.deletes)
+                if df is not None for e in _file_entries(df)]
 
     # -- listen ------------------------------------------------------------
     def subscribe(self, table: str, event: str, sock: socket.socket,
@@ -210,7 +215,8 @@ class ReactiveDBServer:
                 targets = list(self._subs.get((table, event), []))
             if not targets:
                 return
-            rows = [wire.row_to_entry(r.asDict(recursive=True)) for r in df.collect()]
+            # the staged snapshot's files, read on the driver
+            rows = _file_entries(df)
             # one Event per commit carrying every entry, matching the
             # reference envelope ManyResults(Ok([entries]))
             # (listener_hook.rs:74-79) so its client reads value

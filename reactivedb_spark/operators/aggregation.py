@@ -33,6 +33,9 @@ delta's keys), mirroring the reference's per-key re-scan but batched.
 
 from __future__ import annotations
 
+import functools
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from reactivedb_spark import constants as C
@@ -56,6 +59,13 @@ def memo_types(cfg: AggregationTransformConfig, parent: T.StructType) -> dict[st
     """Fixpoint memo typing: init Integer(0) ⇒ LongType, then widen through
     the assignment expressions until stable (e.g. ``memo.count + 1.0``
     widens count to Decimal)."""
+    return dict(_memo_types(cfg, parent))
+
+
+# Typing compiles every expression through py4j (15-40 ms a call), and a
+# commit asks several times for the same (config, schema) pair.
+@functools.lru_cache(maxsize=256)
+def _memo_types(cfg: AggregationTransformConfig, parent: T.StructType) -> dict[str, T.DataType]:
     types: dict[str, T.DataType] = {st.dest: T.LongType() for st in cfg.functions}
     for _ in range(5):
         changed = False
@@ -110,6 +120,18 @@ def classify(cfg: AggregationTransformConfig):
     return plan
 
 
+def exact_sums(cfg: AggregationTransformConfig, parent: T.StructType) -> bool:
+    """Whether the plan is decomposable into sums of integral or decimal
+    type and posts, so a delta's group sums are exact in any order (a
+    ``last`` or a floating sum depends on Spark's row order)."""
+    plan = classify(cfg)
+    if plan is None:
+        return False
+    mtypes = memo_types(cfg, parent)
+    return all(kind == "post" or (kind == "sum" and isinstance(
+        mtypes[dest], (T.LongType, T.DecimalType))) for dest, (kind, _t) in plan.items())
+
+
 def output_schema(cfg: AggregationTransformConfig, parent: T.StructType) -> T.StructType:
     mtypes = memo_types(cfg, parent)
     fields = [
@@ -140,29 +162,41 @@ def merge_with_state(
     is the difference between O(delta) and O(affected groups × group
     size) per micro-batch.
     """
-    plan = classify(cfg)
-    assert plan is not None, "merge_with_state requires a decomposable plan"
-    mtypes = memo_types(cfg, parent_schema)
     o = state_rows.select(
         F.col(C.AGGREGATED_COLUMN).alias("_k"),
         F.lit(True).alias("_matched"),
         *[F.col(st.dest).alias(f"_o_{st.dest}") for st in cfg.functions],
     )
     merged = delta_groups.join(o, delta_groups[C.AGGREGATED_COLUMN] == o["_k"], "left")
+    # Internal columns are referenced through the `o` handle, never by
+    # bare name — config.py additionally rejects colliding dests
+    # (ADVICE r12).
+    return merged.select(*merged_columns(
+        cfg, parent_schema, o["_matched"], lambda d: o[f"_o_{d}"], F.col))
+
+
+def merged_columns(cfg: AggregationTransformConfig, parent_schema: T.StructType,
+                   matched: Column, old: Callable[[str], Column],
+                   new: Callable[[str], Column]) -> list[Column]:
+    """The merge's output columns over delta groups left-joined with their
+    prior state rows: ``matched`` is null where a group has no prior row,
+    ``old(dest)`` the prior value and ``new(dest)`` the delta group's
+    value of a dest."""
+    plan = classify(cfg)
+    assert plan is not None, "merge_with_state requires a decomposable plan"
+    mtypes = memo_types(cfg, parent_schema)
     cur: dict[str, Column] = {}
     for st in cfg.functions:
         kind, _term = plan[st.dest]
         if kind == "sum":
-            # _matched (never-null marker), NOT coalesce on the value:
+            # matched (never-null marker), NOT coalesce on the value:
             # a NULL in prior state means the fold is poisoned and must
             # STAY NULL (r12 fold-fuzz finding); only a join miss (no
-            # prior group row) initializes at 0. Internal columns are
-            # referenced through the `o` handle, never by bare name —
-            # config.py additionally rejects colliding dests (ADVICE r12).
-            old = F.when(o["_matched"].isNull(),
-                         F.lit(0).cast(mtypes[st.dest])
-                         ).otherwise(o[f"_o_{st.dest}"])
-            new = F.col(st.dest)
+            # prior group row) initializes at 0.
+            prior = F.when(matched.isNull(),
+                           F.lit(0).cast(mtypes[st.dest])
+                           ).otherwise(old(st.dest))
+            add = new(st.dest)
             if isinstance(mtypes[st.dest], T.DecimalType):
                 # Per-add operand coercion parity with compute_groups
                 # (ADVICE r12): the fold contract coerces BOTH add
@@ -174,11 +208,11 @@ def merge_with_state(
                 # crossing that re-enters range NULLs the true sequential
                 # fold but not this merge; the general fold path remains
                 # the exact-semantics fallback.
-                old = old.try_cast(T.DecimalType(19, 9))
-                new = new.try_cast(T.DecimalType(19, 9))
-            cur[st.dest] = (old + new).cast(mtypes[st.dest])
+                prior = prior.try_cast(T.DecimalType(19, 9))
+                add = add.try_cast(T.DecimalType(19, 9))
+            cur[st.dest] = (prior + add).cast(mtypes[st.dest])
         elif kind == "last":
-            cur[st.dest] = F.col(st.dest)  # delta rows are strictly newer
+            cur[st.dest] = new(st.dest)  # delta rows are strictly newer
     for st in cfg.functions:
         if plan[st.dest][0] == "post":
             def resolver(m: MemoRef) -> TypedColumn:
@@ -186,12 +220,43 @@ def merge_with_state(
 
             tc = compile_expr(st.expr, parent_schema, memo_resolver=resolver)
             cur[st.dest] = tc.col.cast(mtypes[st.dest])
-    return merged.select(
+    return [
         F.col(C.SOURCE_ENTRY_ID),
         F.col(C.SEQ),
         F.col(C.AGGREGATED_COLUMN),
         *[cur[st.dest].alias(st.dest) for st in cfg.functions],
-    )
+    ]
+
+
+def row_terms(cfg: AggregationTransformConfig, schema: T.StructType) -> dict[str, Column]:
+    """Per parent row, the value each sum or last dest of a decomposable
+    plan aggregates: the summand of a sum (decimal sums coerced as the
+    fold coerces them) and the value of a last."""
+    plan = classify(cfg)
+    mtypes = memo_types(cfg, schema)
+    out = {}
+    for st in cfg.functions:
+        kind, term = plan[st.dest]
+        if kind == "post":
+            continue
+        col = compile_expr(term, schema).col
+        if kind == "sum" and isinstance(mtypes[st.dest], T.DecimalType):
+            # Per-add operand coercion parity (r12 fold-fuzz finding
+            # #3): the fold computes memo + term with BOTH operands
+            # HALF_UP-coerced to decimal(19,9) (the DSL's declared
+            # operand contract, expr/compiler.py) — so each TERM rounds
+            # to 9 fractional digits before it accumulates, and the
+            # running value stays scale-9 exact. A bare F.sum of the
+            # full-scale (38,18) terms kept low-order digits the fold
+            # had already shed. try_cast: term |value| >= 1e10 coerces
+            # to NULL in the fold too. Residual declared divergence: a
+            # mid-sequence |memo| >= 1e10 that RE-ENTERS range NULLs
+            # the fold but not this sum — unreachable without |Σ| >=
+            # 1e10 crossings, and the general fold path remains the
+            # exact-semantics fallback.
+            col = col.try_cast(T.DecimalType(19, 9))
+        out[st.dest] = col
+    return out
 
 
 def compute_groups(cfg: AggregationTransformConfig, parent_rows: DataFrame,
@@ -217,40 +282,23 @@ def compute_groups(cfg: AggregationTransformConfig, parent_rows: DataFrame,
     ]
     if plan is not None:
         aggs, posts = list(base), []
+        terms = row_terms(cfg, schema)
         for st in cfg.functions:
-            kind, term = plan[st.dest]
+            kind = plan[st.dest][0]
             if kind == "sum":
-                tc = compile_expr(term, schema)
-                col = tc.col
-                if isinstance(mtypes[st.dest], T.DecimalType):
-                    # Per-add operand coercion parity (r12 fold-fuzz
-                    # finding #3): the fold computes memo + term with BOTH
-                    # operands HALF_UP-coerced to decimal(19,9) (the DSL's
-                    # declared operand contract, expr/compiler.py) — so
-                    # each TERM rounds to 9 fractional digits before it
-                    # accumulates, and the running value stays scale-9
-                    # exact. A bare F.sum of the full-scale (38,18) terms
-                    # kept low-order digits the fold had already shed.
-                    # try_cast: term |value| >= 1e10 coerces to NULL in
-                    # the fold too. Residual declared divergence: a
-                    # mid-sequence |memo| >= 1e10 that RE-ENTERS range
-                    # NULLs the fold but not this sum — unreachable
-                    # without |Σ| >= 1e10 crossings, and the general fold
-                    # path remains the exact-semantics fallback.
-                    col = col.try_cast(T.DecimalType(19, 9))
                 # NULL-poisoning parity (r12 fold-fuzz finding): the
                 # reference fold computes memo + term sequentially, so ONE
                 # NULL term makes the memo NULL for the rest of the group;
                 # a bare F.sum would SKIP null terms and diverge. count()
                 # counts all rows, count(term) non-null terms — any gap
                 # means the fold would have poisoned the accumulator.
+                col = terms[st.dest]
                 aggs.append(
                     F.when(F.count(F.lit(1)) == F.count(col),
                            F.sum(col))
                     .cast(mtypes[st.dest]).alias(st.dest))
             elif kind == "last":
-                tc = compile_expr(term, schema)
-                aggs.append(_last_agg(tc.col).cast(mtypes[st.dest]).alias(st.dest))
+                aggs.append(_last_agg(terms[st.dest]).cast(mtypes[st.dest]).alias(st.dest))
             else:
                 posts.append(st)
         out = parent_rows.groupBy(

@@ -9,7 +9,7 @@ predicate allows.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from reactivedb_spark import constants as C
 from reactivedb_spark.config import FilterTransformConfig
@@ -34,8 +34,14 @@ def output_schema(cfg: FilterTransformConfig, parent: T.StructType) -> T.StructT
 
 
 def apply_delta(cfg: FilterTransformConfig, delta: DataFrame) -> DataFrame:
-    pred = compile_expr(cfg.filter.expr, delta.schema).col
-    kept = delta.filter(pred)
+    return delta.filter(predicate(cfg, delta.schema)).select(*columns(delta.schema))
+
+
+def predicate(cfg: FilterTransformConfig, parent_schema: T.StructType) -> Column:
+    return compile_expr(cfg.filter.expr, parent_schema).col
+
+
+def columns(parent_schema: T.StructType) -> list[Column]:
+    """The output columns over the kept rows of a parent of ``parent_schema``."""
     cols = [F.col(C.ENTRY_ID).alias(C.SOURCE_ENTRY_ID), F.col(C.SEQ)]
-    cols += [F.col(f.name) for f in business_fields(delta.schema)]
-    return kept.select(*cols)
+    return cols + [F.col(f.name) for f in business_fields(parent_schema)]

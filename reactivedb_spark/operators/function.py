@@ -9,7 +9,7 @@ narrow transformation: no shuffle, pushdown-friendly, whole-stage codegen.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from reactivedb_spark import constants as C
 from reactivedb_spark.config import FunctionTransformConfig
@@ -31,11 +31,15 @@ def apply_delta(cfg: FunctionTransformConfig, delta: DataFrame) -> DataFrame:
     """Map the parent delta to output rows (new ``_entryId`` assigned by the
     engine's commit path; ``_sourceEntryId`` = parent ``_entryId``,
     transform.rs:133-134)."""
-    parent_schema = delta.schema
+    return delta.select(*columns(cfg, delta.schema))
+
+
+def columns(cfg: FunctionTransformConfig, parent_schema: T.StructType) -> list[Column]:
+    """The projection's output columns over a parent of ``parent_schema``."""
     cols = [
         F.col(C.ENTRY_ID).alias(C.SOURCE_ENTRY_ID),
         F.col(C.SEQ).alias(C.SEQ),
     ]
     for st in cfg.functions:
         cols.append(compile_expr(st.expr, parent_schema).col.alias(st.dest))
-    return delta.select(*cols)
+    return cols

@@ -471,14 +471,16 @@ def label_propagation(edges: DataFrame, a: str = "u", b: str = "v",
     from pyspark.sql import Window
 
     e0 = edges.select(F.col(a).alias("s"), F.col(b).alias("d")).localCheckpoint()
-    with _iteration_shuffle(e0):
-        # static vote-join side: partitioned+sorted by the corner once,
-        # so each sweep shuffles only the evolving label relation
-        sym = _pin_by_key(
+    # AQE stays ON and the vote-join side is a plain checkpoint, not a
+    # pinned partitioning: the pinned AQE-off shape lost an interleaved
+    # A/B at sf0.1 in all 5 rounds (min 5.65 vs 4.42 s), because AQE
+    # right-sizes the small per-round vote shuffles
+    with _iteration_shuffle(e0, disable_aqe=False):
+        sym = (
             e0.unionByName(
                 e0.select(F.col("d").alias("s"), F.col("s").alias("d"))
-            ).distinct(),
-            "s",
+            ).distinct()
+            .localCheckpoint()
         )
         labels = (
             sym.select(F.col("s").alias("node")).distinct()

@@ -13,6 +13,21 @@ import tempfile
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Physical memory less 10 GB of headroom, at least a quarter of it
+    and 1g, at most 64g.
+
+    Local mode: the driver IS the cluster, so its heap is sized to the
+    host, not to a driver's usual coordination-only footprint (a 16g
+    heap GC-thrashes a 32-thread suite run into ~3x slowdowns). The
+    headroom holds the JVM's off-heap memory, the Python driver and its
+    workers: a fixed 64g default let the JVM grow past a 15 GB host's
+    memory, which now gets ~5.7g. A 32 GB host gets 22g, a 64 GB host
+    54g, and from 74 GB up the heap keeps the 64g it always had."""
+    mem_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1 << 20)
+    return f"{min(64 << 10, max(1024, mem_mb // 4, mem_mb - (10 << 10)))}m"
+
+
 def get_spark(app_name: str = "reactivedb_spark", cpus: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
@@ -54,10 +69,8 @@ def get_spark(app_name: str = "reactivedb_spark", cpus: int | None = None) -> Sp
         .config("spark.sql.warehouse.dir",
                 os.path.join(tempfile.gettempdir(), "rdb_spark_warehouse"))
         .config("spark.ui.enabled", "false")
-        # local mode: the driver IS the cluster — size its heap to the
-        # host, not to a driver's usual coordination-only footprint (a
-        # 16g heap GC-thrashes a 32-thread suite run into ~3x slowdowns)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "64g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory())
     )
     # A/B hook: extra session confs from the environment
     # ("k=v;k=v"), applied last so experiments can override any default

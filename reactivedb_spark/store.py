@@ -27,7 +27,9 @@ filesystem runs without its native library, a forked ``chmod`` process
 per directory and file the committer creates — ~170-210 ms for a 5-row
 write against ~28 ms through Arrow. Frames above the limit or of unknown
 size keep the distributed writer, the only path for data larger than
-the driver.
+the driver. The engine's local commit path hands its results to the
+same writer as Arrow tables, and reads delta and bucket files back with
+:func:`read_files`, so a delta-sized commit runs no Spark job at all.
 """
 
 from __future__ import annotations
@@ -39,9 +41,10 @@ import uuid as _uuid
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
+from pyspark.serializers import BatchedSerializer, CPickleSerializer
 from pyspark.sql import DataFrame, SparkSession, types as T
 from pyspark.sql.pandas.serializers import ArrowCollectSerializer
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 from pyspark.util import _load_from_socket
 
 # Largest optimized-plan size estimate (Catalyst ``stats.sizeInBytes``,
@@ -62,6 +65,24 @@ from pyspark.util import _load_from_socket
 # whose estimate a join inflates). Those join products grow with the
 # delta, so a commit of ten or more rows sends one to three of its
 # writes to Spark's writer.
+#
+# Second use, in other units: the engine's local commit path takes a
+# child whose inputs (its parent's delta files plus the files of the
+# ``_kb`` buckets it touches) hold at most a quarter of this limit,
+# 1 MB, in parquet file bytes (``engine._local_limit``). Its cost grows
+# with the delta's rows: each projection is a pickled collect, a dict
+# per row and a Python uuid4 per new row (1.1 s for 65k rows at
+# local[4]), where the Spark plans pay a near-fixed 22-34 jobs. Through
+# the oltp_wire DAG at local[4] with a 3.9 GB driver, an insert_df batch
+# took, local / Spark, two rounds in alternating order, in ms:
+#   into an empty engine, delta 0.46 / 0.93 / 1.9 / 2.8 / 4.0 MB:
+#     1048-1411 / 1747-2625, 1417-2015 / 1811-2735, 2265-2786 / 2070-2876,
+#     3528-4088 / 2276-2715, 4499-4611 / 2596-2638;
+#   after a 15k-row preload, delta 0.46 / 0.93 / 1.4 / 1.9 / 2.8 MB:
+#     971-1199 / 3465-4835, 1362-1603 / 3696-4340, 1885-2151 / 3169-4212,
+#     2295-2624 / 3437-4116, 2754-3118 / 3686-3988.
+# The local path lost from 1.9 MB into an empty engine; the quarter is
+# the largest measured size it won in every pair of both series.
 DRIVER_WRITE_LIMIT = 4 << 20
 
 
@@ -103,6 +124,49 @@ def _collect_if_small(df: DataFrame) -> pa.Table | None:
     if not batches:
         return to_arrow_schema(df.schema).empty_table()
     return pa.Table.from_batches([batches[i] for i in order])
+
+
+def collect_rows(df: DataFrame) -> list:
+    """``df.collect()`` that detaches the collected Dataset's py4j proxies
+    once the rows are in (see :func:`_collect_if_small`), so no executed
+    plan outlives the call. ``df`` is consumed: the caller must not use
+    it afterwards."""
+    gateway = df.sparkSession.sparkContext._gateway
+    try:
+        sock_info = df._jdf.collectToPython()
+        try:
+            return list(_load_from_socket(sock_info, BatchedSerializer(CPickleSerializer())))
+        finally:
+            gateway.detach(sock_info)
+    finally:
+        gateway.detach(df._jdf)
+
+
+def conform(tbl: pa.Table, schema: pa.Schema) -> pa.Table:
+    """``tbl``'s columns of ``schema``, in its order and types."""
+    return pa.Table.from_arrays(
+        [tbl.column(f.name).cast(f.type) for f in schema], schema=schema)
+
+
+def read_files(files, schema: T.StructType) -> pa.Table:
+    """The rows of parquet ``files`` as one driver-side Arrow table of
+    ``schema`` (no Spark job). A column a file does not hold is a
+    partition column, read from the file's ``<column>=<value>`` dir."""
+    target = to_arrow_schema(schema)
+    tables = []
+    for f in files:
+        t = pq.read_table(f)
+        part_col, _, part_value = os.path.basename(os.path.dirname(f)).partition("=")
+        cols = []
+        for fld in target:
+            if fld.name in t.column_names:
+                cols.append(t.column(fld.name))
+            elif fld.name == part_col:
+                cols.append(pa.array([part_value] * t.num_rows).cast(fld.type))
+            else:
+                raise KeyError(f"{f} holds no column {fld.name!r}")
+        tables.append(conform(pa.Table.from_arrays(cols, names=target.names), target))
+    return pa.concat_tables(tables) if tables else target.empty_table()
 
 
 class ParquetSnapshotStore:
@@ -265,6 +329,17 @@ class ParquetSnapshotStore:
             self._read_cache[key] = df
         return df
 
+    def partition_files(self, name: str, partition_col: str, values) -> list[str]:
+        """The parquet files of the current version's ``<partition_col>=<v>``
+        dirs for each of ``values``."""
+        out = []
+        for v in values:
+            d = os.path.join(self._dir(name), f"{partition_col}={v}")
+            if os.path.isdir(d):
+                out += [os.path.join(d, f) for f in sorted(os.listdir(d))
+                        if f.endswith(".parquet")]
+        return out
+
     def current_version(self, name: str) -> int:
         return self._versions[name]
 
@@ -349,15 +424,17 @@ class ParquetSnapshotStore:
         """Row count of parquet files from their footers — no Spark job."""
         return sum(pq.read_metadata(f).num_rows for f in files)
 
-    def stage(self, name: str, df: DataFrame,
+    def stage(self, name: str, data,
               partition_col: str | None = None) -> DataFrame | None:
-        """Materialize a frame to scratch parquet and read it back (pins
-        uuids / nondeterministic expressions); None when it holds no
-        rows."""
+        """Materialize a frame (or a driver-side pyarrow Table) to scratch
+        parquet and read it back (pins uuids / nondeterministic
+        expressions); None when it holds no rows."""
         path = os.path.join(self.root, "_staging", name, _uuid.uuid4().hex)
-        if not self.num_rows(self.write(df, path, partition_col)):
+        if not self.num_rows(self.write(data, path, partition_col)):
             return None
-        return self.spark.read.schema(df.schema).parquet(path)
+        schema = (from_arrow_schema(data.schema) if isinstance(data, pa.Table)
+                  else data.schema)
+        return self.spark.read.schema(schema).parquet(path)
 
     def append_delta(self, name: str, data) -> tuple[DataFrame | None, int]:
         """Write a delta (a DataFrame, or a driver-side pyarrow Table of
@@ -369,6 +446,8 @@ class ParquetSnapshotStore:
         path = self._dir(name)
         if isinstance(data, DataFrame):
             data = data.select(*self._schemas[name].fieldNames())
+        else:
+            data = conform(data, to_arrow_schema(self._schemas[name]))
         new_files = self.write(data, path)
         n = self.num_rows(new_files)
         if n == 0:

@@ -7,7 +7,6 @@ import json
 import os
 from decimal import Decimal
 
-from pyspark.sql import DataFrame
 from pyspark.sql.readwriter import DataFrameWriter
 
 from reactivedb_spark import Engine
@@ -192,11 +191,10 @@ COMMIT_CFG = {"tables": [
 ]}
 
 # Spark jobs of one one-row insert of an open order into COMMIT_CFG at
-# local[4]: one collect per rowwise child (2); per aggregation the ledger,
-# the replaced and the new group rows and the partition rewrite (8, twice);
-# for the distinct the ledger, the replaced rows, the count ledger, births,
-# deaths and the partition rewrite (15).
-MAX_JOBS_PER_INSERT = 33
+# local[4]: none. Every child takes the local commit path, whose Spark
+# projections run over local relations that Catalyst folds, so their
+# collects submit no job, and every write goes through the Arrow writer.
+MAX_JOBS_PER_INSERT = 0
 
 
 def test_one_row_commit_runs_no_spark_write_and_no_probe(spark, workspace, monkeypatch):
@@ -215,7 +213,6 @@ def test_one_row_commit_runs_no_spark_write_and_no_probe(spark, workspace, monke
 
     monkeypatch.setattr(DataFrameWriter, "parquet",
                         record("DataFrameWriter.parquet", DataFrameWriter.parquet))
-    monkeypatch.setattr(DataFrame, "collect", record("DataFrame.collect", DataFrame.collect))
     jobs = []
     for key in range(100, 104):
         j0 = dag.nextJobId()
